@@ -1,5 +1,7 @@
-"""Single-file manifest commit protocol shared by the persisted index
-layouts (BM25 inverted index, LSH near-dup pair index).
+"""Single-file manifest commit protocol shared by every persisted layout:
+the customer store (operators/store.py), its materialized views
+(operators/matview.py) and the index family (BM25 inverted index, LSH
+near-dup pair index, ...).
 
 The manifest is the ONLY commit point of an epoch-versioned index: all
 epoch-K+1 files land first, then one atomic os.replace publishes K+1.
@@ -15,6 +17,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 
 
 def read_manifest(path: str) -> dict:
@@ -22,15 +25,22 @@ def read_manifest(path: str) -> dict:
         return json.load(f)
 
 
-def commit_manifest(path: str, payload: dict) -> None:
-    """Atomically publish `payload` (must contain "epoch") as the
-    current manifest: temp file + fsync + os.replace (atomic on POSIX)."""
-    tmp = os.path.join(path, f"MANIFEST.tmp.{payload['epoch']}")
+def write_json_atomic(dest: str, payload: dict) -> None:
+    """Replace the JSON file `dest` with `payload` atomically: temp file +
+    fsync + os.replace (atomic on POSIX), so a reader sees the old
+    document or the new one and a crash never leaves a torn file."""
+    tmp = f"{dest}.tmp.{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         json.dump(payload, f)
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(path, "MANIFEST"))
+    os.replace(tmp, dest)
+
+
+def commit_manifest(path: str, payload: dict) -> None:
+    """Atomically publish `payload` (must contain "epoch") as the
+    current manifest."""
+    write_json_atomic(os.path.join(path, "MANIFEST"), payload)
 
 
 def txn_already_applied(manifest: dict, txn: tuple[str, int] | None) -> bool:
@@ -144,25 +154,30 @@ def gc_stale_epochs(
     m = read_manifest(path)
     base, epoch = m.get("base_epoch", 0), m["epoch"]
     removed: list[str] = []
-
-    def _sweep(sub: str, keep) -> None:
-        d = os.path.join(path, sub)
-        if not os.path.isdir(d):
-            return
-        for name in os.listdir(d):
-            if not name.startswith("epoch="):
-                continue
-            k = int(name.split("=", 1)[1])
-            if not keep(k):
-                full = os.path.join(d, name)
-                shutil.rmtree(full)
-                removed.append(full)
-
     for sub in ranged_subdirs:
-        _sweep(sub, lambda k: base <= k <= epoch)
+        removed += remove_epoch_dirs(
+            os.path.join(path, sub), "epoch=", lambda k: base <= k <= epoch
+        )
     for sub, key in (pinned_subdirs or {}).items():
         pinned = m[key]
-        _sweep(sub, lambda k: k == pinned)
+        removed += remove_epoch_dirs(os.path.join(path, sub), "epoch=", lambda k: k == pinned)
+    return removed
+
+
+def remove_epoch_dirs(parent: str, prefix: str, keep) -> list[str]:
+    """Delete every `<prefix><K>` dir directly under `parent` (K an
+    integer) for which `keep(K)` is false; returns the removed paths.
+    The one sweep behind orphan self-heal and epoch GC, for the index
+    family's `epoch=K` dirs and the store's `vK` version dirs alike."""
+    removed: list[str] = []
+    if not os.path.isdir(parent):
+        return removed
+    for name in os.listdir(parent):
+        k = name[len(prefix):]
+        if name.startswith(prefix) and k.isdigit() and not keep(int(k)):
+            full = os.path.join(parent, name)
+            shutil.rmtree(full)
+            removed.append(full)
     return removed
 
 
@@ -171,11 +186,7 @@ def remove_orphan_epochs(path: str, subdirs: list[str], current_epoch: int) -> N
     committed epoch (they were never published; partial files are fine
     to delete)."""
     for sub in subdirs:
-        base = os.path.join(path, sub)
-        if os.path.isdir(base):
-            for d in os.listdir(base):
-                if d.startswith("epoch=") and int(d.split("=", 1)[1]) > current_epoch:
-                    shutil.rmtree(os.path.join(base, d))
+        remove_epoch_dirs(os.path.join(path, sub), "epoch=", lambda k: k <= current_epoch)
 
 
 def check_key_format(

@@ -23,20 +23,31 @@ is |groups|, not |table|. A quiet refresh (no version advance) is pure
 metadata. Falling behind a vacuum raises in `changes()` and triggers the
 documented fallback: one full recompute, then incremental again.
 
+Commit protocol (operators/manifest.py, as for the store): each refresh
+writes the view to a NEW `epoch=K/` dir, then publishes
+{epoch, store_version, group_cols, measures} with one MANIFEST commit and
+drops the superseded epoch dirs. A crashed refresh leaves the MANIFEST —
+and so the data and `store_version` together — at the old epoch; the next
+refresh folds from there and overwrites the orphan. A view in the old
+layout (`data/` + `_VIEW_META.json`) has no MANIFEST, so it reads as never
+refreshed and its next refresh is a full recompute.
+
 No analogue in the reference (its store is 4 SQL statements); this is
 part of the widened lakehouse surface (SURVEY §7.1 step 7).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from csv_crm_upload_spark.operators.manifest import (
+    commit_manifest,
+    read_manifest,
+    remove_epoch_dirs,
+)
 from csv_crm_upload_spark.operators.store import CustomerStore
 
 _ADD_TAGS = ("insert", "update_postimage")
@@ -69,22 +80,21 @@ class MaterializedAggregate:
 
     # -- state -------------------------------------------------------------
 
-    def _meta_path(self) -> str:
-        return os.path.join(self.root, "_VIEW_META.json")
+    def _manifest(self) -> dict:
+        try:
+            return read_manifest(self.root)
+        except FileNotFoundError:  # never refreshed
+            return {"epoch": -1, "store_version": -1}
 
-    def _data_path(self) -> str:
-        return os.path.join(self.root, "data")
+    def _epoch_dir(self, epoch: int) -> str:
+        return os.path.join(self.root, f"epoch={epoch}")
 
     def last_refreshed_version(self) -> int:
-        try:
-            with open(self._meta_path()) as fh:
-                return int(json.load(fh)["store_version"])
-        except (OSError, ValueError, KeyError):
-            return -1
+        return self._manifest()["store_version"]
 
     def read(self) -> DataFrame:
         """The current view contents (group_cols, n_rows, *measures)."""
-        return self.spark.read.parquet(self._data_path())
+        return self.spark.read.parquet(self._epoch_dir(self._manifest()["epoch"]))
 
     # -- aggregation -------------------------------------------------------
 
@@ -113,25 +123,21 @@ class MaterializedAggregate:
         return changes.groupBy(*self.group_cols).agg(*self._agg_cols(sign))
 
     def _write(self, df: DataFrame, store_version: int) -> None:
-        # snapshot-swap: stage to a temp dir, then atomically rename over
-        # the old data so concurrent readers never see a half-written view
-        tmp = os.path.join(self.root, f"_stage_{uuid.uuid4().hex}")
-        df.repartition(1).write.mode("overwrite").parquet(tmp)
-        old = self._data_path()
-        back = os.path.join(self.root, f"_old_{uuid.uuid4().hex}")
-        if os.path.isdir(old):
-            os.rename(old, back)
-        os.rename(tmp, old)
-        shutil.rmtree(back, ignore_errors=True)
-        with open(self._meta_path(), "w") as fh:
-            json.dump(
-                {
-                    "store_version": store_version,
-                    "group_cols": self.group_cols,
-                    "measures": self.measures,
-                },
-                fh,
-            )
+        # the new epoch dir is invisible until the MANIFEST commit names
+        # it; "overwrite" replaces a crashed refresh's orphan of the same
+        # epoch, and the sweep after the commit drops the superseded one
+        epoch = self._manifest()["epoch"] + 1
+        df.repartition(1).write.mode("overwrite").parquet(self._epoch_dir(epoch))
+        commit_manifest(
+            self.root,
+            {
+                "epoch": epoch,
+                "store_version": store_version,
+                "group_cols": self.group_cols,
+                "measures": self.measures,
+            },
+        )
+        remove_epoch_dirs(self.root, "epoch=", lambda k: k == epoch)
 
     # -- refresh -----------------------------------------------------------
 
@@ -177,8 +183,8 @@ class MaterializedAggregate:
             )
             .filter(F.col("n_rows") > 0)
         )
-        # materialize BEFORE the snapshot swap: `merged` lazily reads the
-        # current view files, which the swap is about to replace
+        # materialize BEFORE the commit: `merged` lazily reads the current
+        # view files, which the sweep after the commit deletes
         rows = merged.localCheckpoint(eager=True)
         self._write(rows, head)
         return {"mode": "incremental", "version": head}

@@ -5,10 +5,10 @@ index on the `uploaded` flag (reference init-db.sh:11-25); its whole query
 surface is four SQL statements (reference database/database.go:16-19).
 
 Spark-first realization: a versioned, HASH-BUCKETED parquet table. Each
-mutation commits a NEW immutable version directory and atomically repoints
-`_LATEST` — the snapshot/commit pattern of lakehouse table formats reduced
-to its minimum. Within a version, rows live in `b=K` subdirectories keyed
-by `pmod(xxhash64(email), n_buckets)`:
+mutation writes a NEW immutable version directory `vK/` and publishes it
+with one MANIFEST commit — the snapshot/commit pattern of lakehouse table
+formats reduced to its minimum. Within a version, rows live in `b=K`
+subdirectories keyed by `pmod(xxhash64(email), n_buckets)`:
 
   * appends write only the buckets the batch touches; untouched buckets
     are hard-linked from the prior version (an ADD FILE commit, no copy);
@@ -23,9 +23,23 @@ Uniqueness (D1) is enforced with optimistic concurrency: `append_unique`
 stages its anti-joined batch against the snapshot it observed, then
 re-verifies INSIDE the write lock — if another writer committed in
 between, the anti-join re-runs against the fresh snapshot before the
-pointer swap, so two concurrent ingests can never both insert the same
+MANIFEST commit, so two concurrent ingests can never both insert the same
 id/email (the check-then-act race the reference avoids via Postgres
 UNIQUE).
+
+Commit protocol (operators/manifest.py, shared with the indexes and the
+materialized views): the root holds `MANIFEST`, the version dirs and,
+while a write runs, `_LOCK`. The MANIFEST — `epoch` (current version),
+`n_buckets`, evolved columns, constraints and `last_txn` watermarks — is
+the ONE commit point, replaced atomically (temp + fsync + rename). A
+version commit links `v{epoch+1}/`, writes its `_COMMIT.json` history
+record, then commits the MANIFEST at the new epoch (a merge's txn rides
+the same commit), so a crash at any step leaves readers the old snapshot
+or the new one, never a mix. Dirs above the epoch were never published:
+versions()/history() ignore them and every writer deletes them under the
+lock before it commits (self-heal). Metadata-only changes (column and
+constraint DDL) commit the MANIFEST at the SAME epoch — no new version.
+A store in the old `_LATEST` + `_META` layout is converted once on open.
 
 Lakehouse surface mapping (what a Delta/Iceberg table would provide —
 the packages are absent from this environment, so the store implements
@@ -69,11 +83,19 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csv_crm_upload_spark.operators.manifest import (
+    commit_manifest,
+    read_manifest,
+    remove_epoch_dirs,
+    txn_already_applied,
+    with_txn,
+)
 from csv_crm_upload_spark.operators.mutate import mark_uploaded
 from csv_crm_upload_spark.schemas import CUSTOMER_SCHEMA
 
 PENDING_COLUMNS = ["id", "first_name", "last_name", "email", "phone"]
 DEFAULT_BUCKETS = 16
+_LEGACY_FILES = ("_LATEST", "_META")  # the commit files of the old layout
 
 
 class ConstraintViolation(Exception):
@@ -99,45 +121,55 @@ class CustomerStore:
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
-        self.n_buckets = self._load_or_init_meta(n_buckets)
+        if not os.path.exists(os.path.join(root, "MANIFEST")):
+            self._init_manifest(n_buckets)
+        self.n_buckets = int(self._manifest()["n_buckets"])
 
     # -- version plumbing ---------------------------------------------------
-    @property
-    def _latest_path(self) -> str:
-        return os.path.join(self.root, "_LATEST")
+    def _manifest(self) -> dict:
+        return read_manifest(self.root)
 
-    @property
-    def _meta_path(self) -> str:
-        return os.path.join(self.root, "_META")
+    def _init_manifest(self, n_buckets: int) -> None:
+        """Create the MANIFEST of a new store (epoch -1: no version yet),
+        or convert a store in the old layout once: its `_LATEST` pointer
+        becomes `epoch`, the `txn` watermarks of its `_META` become
+        `last_txn`, every other `_META` field carries over, then both old
+        files are removed. The bucket count is a table property: fixed at
+        creation, read back on open so every writer buckets identically."""
+        with self._write_lock():
+            if os.path.exists(os.path.join(self.root, "MANIFEST")):
+                return  # a concurrent opener initialized it first
+            latest, meta = (os.path.join(self.root, n) for n in _LEGACY_FILES)
+            m, epoch = {}, -1
+            with contextlib.suppress(FileNotFoundError):
+                with open(meta) as f:
+                    m = json.load(f)
+            with contextlib.suppress(FileNotFoundError):
+                with open(latest) as f:
+                    epoch = int(f.read().strip())
+            txn = m.pop("txn", {})
+            commit_manifest(
+                self.root, {"n_buckets": n_buckets, **m, "epoch": epoch, "last_txn": txn}
+            )
+            for path in (latest, meta):
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(path)
 
-    def _read_meta(self) -> dict:
-        with open(self._meta_path) as f:
-            return json.load(f)
-
-    def _write_meta(self, meta: dict) -> None:
-        tmp = self._meta_path + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._meta_path)
-
-    def _load_or_init_meta(self, n_buckets: int) -> int:
-        """Bucket count is a table property: fixed at creation, read back
-        on open so every writer buckets identically."""
-        try:
-            return int(self._read_meta()["n_buckets"])
-        except (FileNotFoundError, KeyError, ValueError):
-            self._write_meta({"n_buckets": n_buckets})
-            return n_buckets
+    def _healed_manifest(self) -> dict:
+        """The committed manifest, read by a writer INSIDE the write lock,
+        after removing the version dirs above its epoch — what a writer
+        that crashed before its MANIFEST commit left behind (never
+        visible to readers)."""
+        m = self._manifest()
+        remove_epoch_dirs(self.root, "v", lambda k: k <= m["epoch"])
+        return m
 
     # -- schema evolution ---------------------------------------------------
     def _extras(self) -> list[dict]:
         """Evolved columns [{name, type, default}], oldest first. Read
-        from _META on every call so concurrent processes observe an
-        add_column as soon as it commits."""
-        try:
-            return list(self._read_meta().get("extra_cols", []))
-        except (FileNotFoundError, ValueError):
-            return []
+        from the MANIFEST on every call so concurrent processes observe
+        an add_column as soon as it commits."""
+        return list(self._manifest().get("extra_cols", []))
 
     def _table_cols(self, extras: list[dict] | None = None) -> list[str]:
         extras = self._extras() if extras is None else extras
@@ -156,8 +188,8 @@ class CustomerStore:
         if default is not None:
             probe.select(F.lit(default).cast(dtype)).schema  # noqa: B018
         with self._write_lock():
-            meta = self._read_meta()
-            extras = meta.get("extra_cols", [])
+            m = self._healed_manifest()
+            extras = m.get("extra_cols", [])
             taken = {f.name for f in CUSTOMER_SCHEMA.fields} | {e["name"] for e in extras}
             if name in taken or name == "b":
                 raise ValueError(f"column already exists: {name}")
@@ -166,28 +198,26 @@ class CustomerStore:
             # may survive in old files — a fresh physical name keeps that
             # data from resurrecting (Delta column-mapping semantics)
             used_phys = (
-                set(meta.get("retired_physicals", []))
+                set(m.get("retired_physicals", []))
                 | {e.get("physical", e["name"]) for e in extras}
             )
             entry = {"name": name, "type": dtype, "default": default}
             if name in used_phys:
-                n = int(meta.get("phys_counter", 0)) + 1
-                meta["phys_counter"] = n
+                n = int(m.get("phys_counter", 0)) + 1
+                m["phys_counter"] = n
                 entry["physical"] = f"{name}__p{n}"
-            extras.append(entry)
-            meta["extra_cols"] = extras
-            self._write_meta(meta)
+            commit_manifest(self.root, {**m, "extra_cols": [*extras, entry]})
 
     def rename_column(self, old: str, new: str) -> None:
         """ALTER TABLE RENAME COLUMN — metadata-only, for evolved columns.
         The file (physical) name never changes; only the logical name in
-        _META does, so the rename is O(1) with zero data rewrite and old
-        snapshots read back under the NEW name (Delta column-mapping
+        the MANIFEST does, so the rename is O(1) with zero data rewrite and
+        old snapshots read back under the NEW name (Delta column-mapping
         `name` mode). Base schema columns are the reference's contract
         (email is the merge/bucket key) and stay fixed."""
         with self._write_lock():
-            meta = self._read_meta()
-            extras = meta.get("extra_cols", [])
+            m = self._healed_manifest()
+            extras = m.get("extra_cols", [])
             match = [e for e in extras if e["name"] == old]
             if not match:
                 raise ValueError(f"not an evolved column (only those rename): {old}")
@@ -197,8 +227,7 @@ class CustomerStore:
             e = match[0]
             e.setdefault("physical", e["name"])
             e["name"] = new
-            meta["extra_cols"] = extras
-            self._write_meta(meta)
+            commit_manifest(self.root, {**m, "extra_cols": extras})
 
     def drop_column(self, name: str) -> None:
         """ALTER TABLE DROP COLUMN — metadata-only, for evolved columns.
@@ -207,16 +236,21 @@ class CustomerStore:
         regenerate the files without it. The physical name is retired so
         a later add_column of the same name cannot resurrect old data."""
         with self._write_lock():
-            meta = self._read_meta()
-            extras = meta.get("extra_cols", [])
+            m = self._healed_manifest()
+            extras = m.get("extra_cols", [])
             match = [e for e in extras if e["name"] == name]
             if not match:
                 raise ValueError(f"not an evolved column (only those drop): {name}")
-            retired = set(meta.get("retired_physicals", []))
+            retired = set(m.get("retired_physicals", []))
             retired.add(match[0].get("physical", match[0]["name"]))
-            meta["retired_physicals"] = sorted(retired)
-            meta["extra_cols"] = [e for e in extras if e["name"] != name]
-            self._write_meta(meta)
+            commit_manifest(
+                self.root,
+                {
+                    **m,
+                    "retired_physicals": sorted(retired),
+                    "extra_cols": [e for e in extras if e["name"] != name],
+                },
+            )
 
     def _apply_extras(self, df: DataFrame, extras: list[dict]) -> DataFrame:
         """Widen a physical scan to the logical schema: evolved columns
@@ -267,41 +301,43 @@ class CustomerStore:
         return batch.select(*out)
 
     def _current_version(self) -> int:
-        try:
-            with open(self._latest_path) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return -1
+        return self._manifest()["epoch"]
 
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.root, f"v{v:08d}")
 
-    def _commit(self, v: int, op: str = "write", metrics: dict | None = None) -> None:
-        # commit metadata rides inside the version dir (underscore-prefixed
-        # → invisible to Spark's partition discovery) and is written BEFORE
-        # the pointer swap, so a version is never visible without its
-        # history entry
+    def _commit(
+        self,
+        m: dict,
+        v: int,
+        op: str,
+        metrics: dict | None = None,
+        txn: tuple[str, int] | None = None,
+    ) -> None:
+        """Publish version `v`, whose files are in place, on top of
+        manifest `m`. The history record rides inside the version dir
+        (underscore-prefixed → invisible to Spark's partition discovery)
+        and is written BEFORE the commit, so a version is never visible
+        without it; it does not decide visibility — the MANIFEST commit
+        at epoch `v`, with `txn`'s watermark folded in, does. MUST be
+        called inside the write lock."""
         info = {
             "version": v,
             "operation": op,
             "timestamp": time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime()),
             "metrics": metrics or {},
         }
-        vdir = self._version_dir(v)
-        if os.path.isdir(vdir):
-            with open(os.path.join(vdir, "_COMMIT.json"), "w") as f:
-                json.dump(info, f)
-        tmp = self._latest_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._latest_path)  # atomic pointer swap
+        with open(os.path.join(self._version_dir(v), "_COMMIT.json"), "w") as f:
+            json.dump(info, f)
+        commit_manifest(self.root, with_txn({**m, "epoch": v}, txn))
 
     def history(self) -> list[dict]:
-        """DESCRIBE HISTORY: one entry per still-on-disk snapshot, newest
-        first — operation, UTC timestamp, and operation metrics (rows
-        inserted/updated/deleted...). Versions vacuumed away are gone;
-        versions committed by pre-history builds read as operation
-        'unknown'. Driver-side metadata (O(versions)), no Spark job."""
+        """DESCRIBE HISTORY: one entry per still-on-disk committed
+        snapshot, newest first — operation, UTC timestamp, and operation
+        metrics (rows inserted/updated/deleted...). Versions vacuumed
+        away are gone; versions committed by pre-history builds read as
+        operation 'unknown'. Driver-side metadata (O(versions)), no Spark
+        job."""
         out = []
         for v in sorted(self.versions(), reverse=True):
             path = os.path.join(self._version_dir(v), "_COMMIT.json")
@@ -317,8 +353,8 @@ class CustomerStore:
     @contextlib.contextmanager
     def _write_lock(self, timeout_s: float = 60.0):
         """Advisory single-writer lock (O_EXCL lockfile) around mutations:
-        two concurrent CLI invocations would otherwise race the pointer
-        swap. Readers never take the lock — they see the last committed
+        two concurrent CLI invocations would otherwise race the MANIFEST
+        commit. Readers never take the lock — they see the last committed
         snapshot (MVCC-style isolation).
 
         Stale-lock recovery: a writer that crashes between acquiring the
@@ -375,10 +411,7 @@ class CustomerStore:
 
     # -- CHECK constraints --------------------------------------------------
     def _constraints(self) -> dict[str, str]:
-        try:
-            return dict(self._read_meta().get("constraints", {}))
-        except (FileNotFoundError, ValueError):
-            return {}
+        return dict(self._manifest().get("constraints", {}))
 
     def add_constraint(self, name: str, expr: str) -> None:
         """ALTER TABLE ADD CONSTRAINT name CHECK (expr) — Delta-style
@@ -394,29 +427,40 @@ class CustomerStore:
         if bad:
             raise ConstraintViolation({name: bad})
         with self._write_lock():
-            meta = self._read_meta()
-            cons = meta.get("constraints", {})
+            m = self._healed_manifest()
+            cons = m.get("constraints", {})
             if name in cons:
                 raise ValueError(f"constraint already exists: {name}")
-            cons[name] = expr
-            meta["constraints"] = cons
-            self._write_meta(meta)
+            commit_manifest(self.root, {**m, "constraints": {**cons, name: expr}})
 
     def drop_constraint(self, name: str) -> None:
         with self._write_lock():
-            meta = self._read_meta()
-            cons = meta.get("constraints", {})
+            m = self._healed_manifest()
+            cons = dict(m.get("constraints", {}))
             if name not in cons:
                 raise KeyError(f"no such constraint: {name}")
             del cons[name]
-            meta["constraints"] = cons
-            self._write_meta(meta)
+            commit_manifest(self.root, {**m, "constraints": cons})
 
     # -- staging / commit helpers ------------------------------------------
+    def _staging_path(self) -> str:
+        return os.path.join(self.root, f"staging_{os.getpid()}_{uuid.uuid4().hex[:8]}")
+
+    def _empty(self, extras: list[dict]) -> DataFrame:
+        """A zero-row frame with the logical table schema."""
+        return self._apply_extras(self.spark.createDataFrame([], CUSTOMER_SCHEMA), extras)
+
+    def _bucket_of(self, email: str) -> int:
+        """The email's bucket id, computed by the same pmod(xxhash64) the
+        writer uses (one single-row job)."""
+        return self.spark.range(1).select(
+            F.pmod(F.xxhash64(F.lit(email)), F.lit(self.n_buckets)).cast("int").alias("b")
+        ).first()["b"]
+
     def _stage(self, batch: DataFrame) -> str:
         """Write a batch to a staging dir, partitioned by bucket.
         Runs OUTSIDE the lock (the expensive part)."""
-        staging = os.path.join(self.root, f"staging_{os.getpid()}_{uuid.uuid4().hex[:8]}")
+        staging = self._staging_path()
         (
             self._to_physical(self._conform(batch))
             .withColumn("b", _bucket_col(self.n_buckets))
@@ -478,15 +522,17 @@ class CustomerStore:
         replace_buckets: set[str] = frozenset(),
         op: str = "append",
         metrics: dict | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> int:
         """Create version v+1 = prev version ∪ staged buckets. MUST be
         called inside the write lock. Buckets named in `replace_buckets`
         take ONLY the staged files (U1 rewrite); all other prior buckets
         are hard-linked (no data copy). Returns the new version."""
-        v = self._current_version()
+        m = self._healed_manifest()
+        v = m["epoch"]
         new_v = v + 1
         new_dir = self._version_dir(new_v)
-        os.makedirs(new_dir, exist_ok=True)
+        os.makedirs(new_dir)
         prev = self._bucket_dirs(self._version_dir(v)) if v >= 0 else {}
         staged = self._bucket_dirs(staging)
         for bname, bpath in prev.items():
@@ -494,8 +540,20 @@ class CustomerStore:
                 self._link_files(bpath, os.path.join(new_dir, bname))
         for bname, bpath in staged.items():
             self._link_files(bpath, os.path.join(new_dir, bname))
-        self._commit(new_v, op=op, metrics=metrics)
+        self._commit(m, new_v, op, metrics, txn)
         return new_v
+
+    def _commit_rewrite(
+        self, df: DataFrame, replace_buckets: set[str], op: str, metrics: dict
+    ) -> int:
+        """Stage `df` (which carries the bucket column `b`) and commit it
+        with _commit_merge. MUST be called inside the write lock."""
+        staging = self._staging_path()
+        try:
+            self._to_physical(df).write.mode("overwrite").partitionBy("b").parquet(staging)
+            return self._commit_merge(staging, replace_buckets, op, metrics)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
 
     # -- operators ----------------------------------------------------------
     def read(self) -> DataFrame:
@@ -507,19 +565,16 @@ class CustomerStore:
         """Time travel: scan snapshot `version` (every committed version
         is immutable and remains readable until vacuumed) — the
         `VERSION AS OF` surface of a lakehouse table format."""
-        extras = self._extras()
+        m = self._manifest()
+        extras = m.get("extra_cols", [])
         if version < 0:
-            return self._apply_extras(
-                self.spark.createDataFrame([], CUSTOMER_SCHEMA), extras
-            )
+            return self._empty(extras)
         vdir = self._version_dir(version)
-        if not os.path.isdir(vdir):
+        if version > m["epoch"] or not os.path.isdir(vdir):
             raise FileNotFoundError(f"version {version} not found (vacuumed?): {vdir}")
         if not self._bucket_dirs(vdir):
             # a legal empty snapshot (e.g. delete() removed every row)
-            return self._apply_extras(
-                self.spark.createDataFrame([], CUSTOMER_SCHEMA), extras
-            )
+            return self._empty(extras)
         reader = self.spark.read
         if extras:
             # snapshots can mix files written before/after an add_column —
@@ -544,13 +599,14 @@ class CustomerStore:
         )
 
     def versions(self) -> list[int]:
-        """Committed snapshot versions still on disk, oldest first."""
-        out = sorted(
+        """Committed snapshot versions still on disk, oldest first. A
+        version dir above the MANIFEST epoch was never committed."""
+        epoch = self._current_version()
+        return sorted(
             int(name[1:])
             for name in os.listdir(self.root)
-            if name.startswith("v") and name[1:].isdigit()
+            if name.startswith("v") and name[1:].isdigit() and int(name[1:]) <= epoch
         )
-        return out
 
     def changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """CDC change feed between two snapshots (the CHANGES/table_changes
@@ -596,9 +652,7 @@ class CustomerStore:
         def _bucket_rows(vdir: str, present: dict) -> DataFrame:
             sel = [b for b in changed if b in present]
             if not sel:
-                return self._apply_extras(
-                    self.spark.createDataFrame([], CUSTOMER_SCHEMA), extras
-                )
+                return self._empty(extras)
             return self._read_buckets(vdir, sel).select(*cols)
 
         old = _bucket_rows(self._version_dir(v_from), old_map)
@@ -634,33 +688,21 @@ class CustomerStore:
             if v < 0:
                 return -1
             table = self.read()
-            staging = os.path.join(self.root, f"staging_{os.getpid()}_{uuid.uuid4().hex[:8]}")
             sort_cols = ["b"]
             if zorder_by:
                 from csv_crm_upload_spark.operators.layout import _zvalue
 
                 table = table.withColumn("_z", _zvalue(table, zorder_by))
                 sort_cols = ["b", "_z"]
-            try:
-                (
-                    self._to_physical(table)
-                    .withColumn("b", _bucket_col(self.n_buckets))
-                    .repartition(self.n_buckets, "b")
-                    .sortWithinPartitions(*sort_cols)
-                    .drop("_z")
-                    .write.mode("overwrite")
-                    .partitionBy("b")
-                    .parquet(staging)
-                )
-                all_buckets = set(self._bucket_dirs(self._version_dir(v)))
-                return self._commit_merge(
-                    staging,
-                    replace_buckets=all_buckets,
-                    op="compact",
-                    metrics={"zorder_by": list(zorder_by or [])},
-                )
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
+            return self._commit_rewrite(
+                table.withColumn("b", _bucket_col(self.n_buckets))
+                .repartition(self.n_buckets, "b")
+                .sortWithinPartitions(*sort_cols)
+                .drop("_z"),
+                set(self._bucket_dirs(self._version_dir(v))),
+                "compact",
+                {"zorder_by": list(zorder_by or [])},
+            )
 
     def restore(self, version: int) -> int:
         """RESTORE TO VERSION AS OF: re-commit an old snapshot as a NEW
@@ -669,15 +711,16 @@ class CustomerStore:
         files, so it is O(files) metadata work with zero data copy, and
         readers of intermediate versions are untouched."""
         with self._write_lock():
+            m = self._healed_manifest()
             vdir = self._version_dir(version)
             if version < 0 or not os.path.isdir(vdir):
                 raise FileNotFoundError(f"version {version} not found (vacuumed?): {vdir}")
-            new_v = self._current_version() + 1
+            new_v = m["epoch"] + 1
             new_dir = self._version_dir(new_v)
-            os.makedirs(new_dir, exist_ok=True)
+            os.makedirs(new_dir)
             for bname, bpath in self._bucket_dirs(vdir).items():
                 self._link_files(bpath, os.path.join(new_dir, bname))
-            self._commit(new_v, op="restore", metrics={"restored_version": version})
+            self._commit(m, new_v, "restore", {"restored_version": version})
         return new_v
 
     def lookup(self, email: str) -> DataFrame:
@@ -687,9 +730,7 @@ class CustomerStore:
         regardless of table size, the hash-index point read the
         reference gets from its Postgres UNIQUE index. The residual
         email filter then pushes into that one parquet scan."""
-        b = self.spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(email)), F.lit(self.n_buckets)).cast("int").alias("b")
-        ).first()["b"]
+        b = self._bucket_of(email)
         v = self._current_version()
         if v < 0:
             raise FileNotFoundError("store has no committed version yet")
@@ -697,10 +738,7 @@ class CustomerStore:
         if f"b={b}" not in self._bucket_dirs(vdir):
             # the email's bucket holds no rows at all → provably absent,
             # answered from metadata without any scan
-            extras = self._extras()
-            return self._apply_extras(
-                self.spark.createDataFrame([], CUSTOMER_SCHEMA), extras
-            )
+            return self._empty(self._extras())
         return self._read_buckets(vdir, [f"b={b}"]).filter(F.col("email") == email)
 
     def maybe_compact(
@@ -727,26 +765,24 @@ class CustomerStore:
         zero bytes copied. Both tables then evolve independently: every
         commit on either side writes new files and re-links untouched
         ones, so the clone is copy-on-write by construction and no write
-        can ever leak through to the other table. Schema (bucket count +
-        evolved columns) carries over; history does NOT (the clone starts
-        at its own v0), matching shallow-clone semantics. Requires the
-        destination on the same filesystem (hard links)."""
-        src_v = self._current_version()
+        can ever leak through to the other table. Table metadata (bucket
+        count, evolved columns, constraints, txn watermarks) carries over;
+        history does NOT (the clone starts at its own v0), matching
+        shallow-clone semantics. Requires the destination on the same
+        filesystem (hard links)."""
+        m = self._manifest()
+        src_v = m["epoch"]
         if src_v < 0:
             raise FileNotFoundError("nothing to clone: store has no committed version")
-        if os.path.exists(os.path.join(dest_root, "_META")) or os.path.exists(
-            os.path.join(dest_root, "_LATEST")
-        ):
+        if any(os.path.exists(os.path.join(dest_root, n)) for n in ("MANIFEST", *_LEGACY_FILES)):
             raise FileExistsError(f"clone destination is already a store: {dest_root}")
         dest = CustomerStore(self.spark, dest_root, n_buckets=self.n_buckets)
-        dest._write_meta(self._read_meta())  # n_buckets + evolved columns
-        new_dir = dest._version_dir(0)
-        os.makedirs(new_dir, exist_ok=True)
-        for bname, bpath in self._bucket_dirs(self._version_dir(src_v)).items():
-            self._link_files(bpath, os.path.join(new_dir, bname))
-        dest._commit(
-            0, op="clone", metrics={"source_root": self.root, "source_version": src_v}
-        )
+        with dest._write_lock():
+            new_dir = dest._version_dir(0)
+            os.makedirs(new_dir)
+            for bname, bpath in self._bucket_dirs(self._version_dir(src_v)).items():
+                self._link_files(bpath, os.path.join(new_dir, bname))
+            dest._commit(m, 0, "clone", {"source_root": self.root, "source_version": src_v})
         return dest
 
     def vacuum(self, keep_last: int = 1) -> list[int]:
@@ -756,7 +792,7 @@ class CustomerStore:
         links. Returns the versions removed."""
         keep_last = max(1, keep_last)
         with self._write_lock():
-            current = self._current_version()
+            current = self._healed_manifest()["epoch"]
             removed = [v for v in self.versions() if v <= current - keep_last]
             for v in removed:
                 shutil.rmtree(self._version_dir(v), ignore_errors=True)
@@ -786,7 +822,7 @@ class CustomerStore:
         """D1-correct append: stage the anti-joined batch optimistically
         against the observed snapshot, then RE-VERIFY inside the write
         lock — if another writer committed first, re-run the anti-join
-        against the fresh snapshot before the pointer swap. Only the
+        against the fresh snapshot before the commit. Only the
         conflict path pays the recheck. Returns rows inserted."""
         from csv_crm_upload_spark.operators.dedup import anti_join_existing
 
@@ -817,22 +853,10 @@ class CustomerStore:
             shutil.rmtree(staging, ignore_errors=True)
         return inserted
 
-    def _record_txn(self, app_id: str, version: int) -> None:
-        """Record an idempotent-writer watermark. MUST be called inside
-        the write lock (read-modify-write of _META)."""
-        meta = self._read_meta()
-        txn = meta.get("txn", {})
-        txn[app_id] = max(int(txn.get(app_id, -1)), int(version))
-        meta["txn"] = txn
-        self._write_meta(meta)
-
     def last_txn(self, app_id: str) -> int:
         """Highest transaction version recorded for an idempotent writer
         (Delta's txnAppId/txnVersion surface); -1 if never seen."""
-        try:
-            return int(self._read_meta().get("txn", {}).get(app_id, -1))
-        except (FileNotFoundError, ValueError):
-            return -1
+        return int(self._manifest().get("last_txn", {}).get(app_id, -1))
 
     def merge(self, source: DataFrame, now=None, txn: tuple[str, int] | None = None) -> dict[str, int]:
         """MERGE INTO — the Delta/Iceberg upsert surface on the versioned
@@ -858,10 +882,11 @@ class CustomerStore:
         transaction (Delta's txnAppId/txnVersion): if `version` ≤ the
         last recorded version for `app_id`, the merge is a no-op
         ({"applied": False}) — the foreachBatch replay-after-restart
-        guard. The marker is recorded under the same write lock after the
-        data commit; a crash between the two re-applies the batch once,
-        which MERGE absorbs (same keys re-update to the same values, no
-        duplicate inserts) — at-least-once commit, exactly-once effect.
+        guard. The marker rides the SAME MANIFEST commit as the merged
+        version (a merge that changes no row commits the marker alone, at
+        the same epoch), so a crash commits both or neither: a replay
+        either no-ops or applies the batch for the first time — exactly
+        once.
         """
         from csv_crm_upload_spark.operators.dedup import dedupe_batch
         from csv_crm_upload_spark.operators.mutate import finalize_columns
@@ -879,12 +904,10 @@ class CustomerStore:
             )
         )
         with self._write_lock():
-            if txn is not None:
-                app_id, txn_v = txn
-                meta = self._read_meta()
-                if int(meta.get("txn", {}).get(app_id, -1)) >= txn_v:
-                    return {"updated": 0, "inserted": 0, "skipped": 0, "applied": False}
-            v = self._current_version()
+            m = self._healed_manifest()
+            if txn_already_applied(m, txn):
+                return {"updated": 0, "inserted": 0, "skipped": 0, "applied": False}
+            v = m["epoch"]
             vdir = self._version_dir(v)
             if v >= 0:
                 hit_buckets = {
@@ -923,7 +946,7 @@ class CustomerStore:
             n_skipped = insert_cand.count() - n_inserted
             if n_updated == 0 and n_inserted == 0:
                 if txn is not None:
-                    self._record_txn(*txn)
+                    commit_manifest(self.root, with_txn(m, txn))
                 return {"updated": 0, "inserted": 0, "skipped": n_skipped}
             staged_df = self._conform(finalize_columns(inserts, now=now), extras)
             if rewritten is not None:
@@ -939,9 +962,8 @@ class CustomerStore:
                         "rows_inserted": n_inserted,
                         "rows_skipped": n_skipped,
                     },
+                    txn=txn,
                 )
-                if txn is not None:
-                    self._record_txn(*txn)
             finally:
                 shutil.rmtree(staging, ignore_errors=True)
         return {"updated": n_updated, "inserted": n_inserted, "skipped": n_skipped}
@@ -979,18 +1001,9 @@ class CustomerStore:
                 return 0
             sub = self._read_buckets(vdir, affected)
             n_deleted = sub.filter(is_hit).count()
-            kept = sub.filter(~is_hit)
-            staging = os.path.join(self.root, f"staging_{os.getpid()}_{uuid.uuid4().hex[:8]}")
-            try:
-                self._to_physical(kept).write.mode("overwrite").partitionBy("b").parquet(staging)
-                self._commit_merge(
-                    staging,
-                    replace_buckets=set(affected),
-                    op="delete",
-                    metrics={"rows_deleted": n_deleted},
-                )
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
+            self._commit_rewrite(
+                sub.filter(~is_hit), set(affected), "delete", {"rows_deleted": n_deleted}
+            )
         return n_deleted
 
     def forget(self, email: str) -> int:
@@ -1015,10 +1028,7 @@ class CustomerStore:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        bucket_id = self.spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(email)), F.lit(self.n_buckets)).cast("int").alias("b")
-        ).first()["b"]
-        b = f"b={bucket_id}"
+        b = f"b={self._bucket_of(email)}"
         erased_current = 0
         with self._write_lock():
             current = self._current_version()
@@ -1132,16 +1142,10 @@ class CustomerStore:
             )
             if flipped == 0:
                 return 0
-            updated = mark_uploaded(sub, emails, now=now)  # b passes through
-            staging = os.path.join(self.root, f"staging_{os.getpid()}_{uuid.uuid4().hex[:8]}")
-            try:
-                self._to_physical(updated).write.mode("overwrite").partitionBy("b").parquet(staging)
-                self._commit_merge(
-                    staging,
-                    replace_buckets=set(affected),
-                    op="update",
-                    metrics={"rows_updated": flipped},
-                )
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
+            self._commit_rewrite(
+                mark_uploaded(sub, emails, now=now),  # b passes through
+                set(affected),
+                "update",
+                {"rows_updated": flipped},
+            )
         return flipped

@@ -95,11 +95,6 @@ def ingest_csv(
     )
 
 
-def pending_preview(store: CustomerStore) -> DataFrame:
-    """The reference's one recurring query: who is pending upload?
-    (reference database/database.go:18; SURVEY §7.2 flagship)."""
-    return store.pending().orderBy(F.col("id"))
-
 def ingest_jsonl(
     spark: SparkSession,
     path: str,

@@ -235,19 +235,12 @@ class CorpusIndexService:
         BEFORE any index update so a crash mid-fold replays precisely
         that batch (with the same txn seq) instead of re-listing a
         possibly different one."""
-        tmp = self.cursor_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "seen": sorted(self._seen),
-                    "txn_seq": self._txn_seq,
-                    "inflight": inflight or {},
-                },
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.cursor_path)
+        from csv_crm_upload_spark.operators.manifest import write_json_atomic
+
+        write_json_atomic(
+            self.cursor_path,
+            {"seen": sorted(self._seen), "txn_seq": self._txn_seq, "inflight": inflight or {}},
+        )
 
     @staticmethod
     def _new_shards(drop_dir: str | None, seen: set[str]) -> list[str]:

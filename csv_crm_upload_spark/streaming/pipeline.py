@@ -284,10 +284,10 @@ def run_merge_stream(
     a lakehouse serves with `foreachBatch + MERGE + txnAppId`.
 
     foreachBatch re-delivers a batch after a crash (at-least-once); the
-    (app_id, batch_id) transaction marker recorded by store.merge turns
-    the replay into a no-op, and MERGE's key-idempotency absorbs the one
-    unprotected crash window (marker-not-yet-written). Validation rejects
-    never reach the table. Returns the StreamingQuery."""
+    (app_id, batch_id) transaction marker that store.merge commits in the
+    same MANIFEST commit as the merged version turns the replay into a
+    no-op, with no crash window between data and marker. Validation
+    rejects never reach the table. Returns the StreamingQuery."""
     from csv_crm_upload_spark.operators.validate import validate_split
 
     def process(batch_df, batch_id: int) -> None:
