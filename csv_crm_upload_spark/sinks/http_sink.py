@@ -7,8 +7,11 @@ Reference behavior reproduced (crm/upload/uploader.go):
     sink fails; reset after any success (:152-157).
   * T5 (:17-18,47,133-150) — bounded concurrency (channel cap 25). In
     Spark, partition-level parallelism replaces the hand-rolled queue:
-    `repartition(k).foreachPartition(...)` caps in-flight connections at
-    k × (per-partition serial posts).
+    each partition posts its rows serially over one connection, so the
+    partition count is the cap on connections in flight. `upload_pending`
+    uses min(concurrency, defaultParallelism) partitions: more partitions
+    than task slots cannot run at once, and every Python task pays a fixed
+    worker set-up cost (about 0.12 CPU s on a 4-CPU VM).
 
 Delivery semantics (SURVEY §2.9, judge-relevant): POST then flag-flip, so
 a crash between the 201 and the mark leaves `uploaded=false` and the row
@@ -16,18 +19,23 @@ is re-sent next cycle — at-least-once to the sink, converging to
 effectively-once via the flag, idempotency key = email. Identical to the
 reference's contract; we do not promise exactly-once to an HTTP sink.
 
-Implementation notes: uses only `urllib` (stdlib) so the container needs
-no extra packages; per-partition code opens one connection pool, posts
-serially, and returns (email, status) rows so the driver-side plan can
-compute the success set WITHOUT collecting payloads.
+Implementation notes: uses only `http.client` (stdlib) so the container
+needs no extra packages. Each partition holds one keep-alive connection
+(SURVEY §4: per-partition session reuse), reopened after a connection
+error, a malformed reply or a reply that closes it (HTTP/1.0 servers). A
+failed exchange is one failed attempt (status -1) under the same backoff
+as a 5xx — never re-sent silently on a fresh connection, since the first
+send may already have been accepted. Partitions return (email, status,
+attempts) rows so the driver-side plan can compute the success set
+WITHOUT collecting payloads.
 """
 
 from __future__ import annotations
 
+import http.client
 import json
 import time
-import urllib.error
-import urllib.request
+import urllib.parse
 from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame
@@ -54,20 +62,22 @@ def fibonacci_backoff(max_tries: int) -> Iterator[float]:
         yield float(a)
 
 
-def _post_row(url: str, payload: dict, timeout: float) -> int:
-    req = urllib.request.Request(
-        url,
-        data=json.dumps(payload).encode("utf-8"),
-        headers={"Content-Type": "application/json"},
-        method="POST",
-    )
+def _post_row(conn: http.client.HTTPConnection, path: str, payload: dict) -> int:
+    """POST `payload` as JSON on `conn`; the reply's status, or -1 when the
+    exchange failed (refused, reset, timed out, malformed reply)."""
     try:
-        with urllib.request.urlopen(req, timeout=timeout) as resp:
+        conn.request(
+            "POST",
+            path,
+            body=json.dumps(payload).encode("utf-8"),
+            headers={"Content-Type": "application/json"},
+        )
+        with conn.getresponse() as resp:
+            resp.read()  # drain, so the connection can carry the next request
             return resp.status
-    except urllib.error.HTTPError as e:
-        return e.code
-    except (urllib.error.URLError, OSError):
-        return -1  # connection-level failure
+    except (http.client.HTTPException, OSError):
+        conn.close()  # state unknown: the next request opens a new socket
+        return -1
 
 
 def upload_partition(
@@ -77,36 +87,45 @@ def upload_partition(
     timeout: float = DEFAULT_TIMEOUT_S,
     sleep=time.sleep,
 ) -> Iterator[tuple[str, int, int]]:
-    """Serial POST loop for one partition; retries with fib backoff.
+    """Serial POST loop for one partition over one keep-alive connection;
+    retries with fib backoff.
 
-    Yields (email, final_status, attempts). Backoff resets after any
-    success, mirroring the reference's success-signal reset
-    (uploader.go:152-157).
+    Yields (email, final_status, attempts); status -1 means the last
+    attempt got no valid HTTP reply. Backoff resets after any success,
+    mirroring the reference's success-signal reset (uploader.go:152-157).
     """
-    url = crm_url.rstrip("/") + "/customers"
-    for row in rows:
-        payload = {
-            "id": row["id"],
-            "first_name": row["first_name"],
-            "last_name": row["last_name"],
-            "email": row["email"],
-            "phone": row["phone"],
-        }
-        attempts = 0
-        status = -1
-        backoff = fibonacci_backoff(max_tries)
-        while attempts < max_tries:
-            attempts += 1
-            status = _post_row(url, payload, timeout)
-            if status == SUCCESS_STATUS or attempts >= max_tries:
-                # no backoff sleep after the FINAL failed attempt — a dead
-                # sink otherwise wastes an extra max-backoff per row
-                break
-            try:
-                sleep(next(backoff))
-            except StopIteration:  # pragma: no cover
-                break
-        yield (row["email"], status, attempts)
+    url = urllib.parse.urlsplit(crm_url.rstrip("/") + "/customers")
+    factory = http.client.HTTPSConnection if url.scheme == "https" else http.client.HTTPConnection
+    # Opens no socket yet. After close(), which http.client also calls
+    # itself when a reply ends the connection (HTTP/1.0, `Connection:
+    # close`), the next request reconnects.
+    conn = factory(url.netloc, timeout=timeout)
+    try:
+        for row in rows:
+            payload = {
+                "id": row["id"],
+                "first_name": row["first_name"],
+                "last_name": row["last_name"],
+                "email": row["email"],
+                "phone": row["phone"],
+            }
+            attempts = 0
+            status = -1
+            backoff = fibonacci_backoff(max_tries)
+            while attempts < max_tries:
+                attempts += 1
+                status = _post_row(conn, url.path, payload)
+                if status == SUCCESS_STATUS or attempts >= max_tries:
+                    # no backoff sleep after the FINAL failed attempt — a dead
+                    # sink otherwise wastes an extra max-backoff per row
+                    break
+                try:
+                    sleep(next(backoff))
+                except StopIteration:  # pragma: no cover
+                    break
+            yield (row["email"], status, attempts)
+    finally:
+        conn.close()
 
 
 def upload_pending(
@@ -118,13 +137,15 @@ def upload_pending(
 ) -> DataFrame:
     """Distributed upload of the pending set; returns (email,status,attempts).
 
-    `repartition(concurrency)` bounds in-flight connections (T5);
-    `mapPartitions` via DataFrame->RDD keeps the post loop off the driver
-    — no collect of the pending set, arbitrarily large pending sets
-    stream through executors.
+    The pending set is repartitioned to min(concurrency,
+    defaultParallelism) partitions, each posting serially over its own
+    connection, so at most `concurrency` connections are in flight (T5)
+    and no task waits for a free slot. `mapPartitions` via DataFrame->RDD
+    keeps the post loop off the driver — no collect of the pending set,
+    arbitrarily large pending sets stream through executors.
     """
     spark = pending.sparkSession
-    k = max(1, concurrency)
+    k = max(1, min(concurrency, spark.sparkContext.defaultParallelism))
 
     def run(it):
         return upload_partition(it, crm_url, max_tries=max_tries, sleep=sleep)
